@@ -547,6 +547,8 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
             raise ValueError(f"expected marker at byte {pos}")
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1  # optional fill bytes before any marker (B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("truncated marker segment")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
@@ -1145,6 +1147,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             raise ValueError(f"expected marker at byte {pos}")
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1  # optional fill bytes before any marker (B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("truncated marker segment")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI

@@ -10,20 +10,29 @@ results — no full rebuild. The split follows the stages' algebra:
   rows a full run would — appended to the mentions/links tables, the
   accumulated state is byte-equal to a from-scratch build (pinned by
   tests/test_incremental_kg.py).
+- the delta runs through the NLP ``mapInPandas`` exactly once per
+  tick: the delta turns and their mentions are persisted for the tick,
+  so the links commit, the mentions commit and the processed-row count
+  all read the same materialized rows instead of re-deriving them
+  (each re-derivation paid the Python boundary again). They are
+  unpersisted when the tick ends, commit failures included.
 - canonicalization (coref edges → connected components) and the entity
   rollup are global by nature — a new mention can merge two old
   entities — so they recompute from the ACCUMULATED links table each
-  tick. They are the cheap tail of the pipeline (CC ≈ 10% of wall at
-  bench scale); the NLP+linking ~70% is what incrementality saves.
-  Triples share the same recompute-from-state shape and are left to the
-  batch pipeline (plans/kg.py) by the same cost argument.
+  tick. Tick-sized edge sets (tens of edges for thousands of links) take
+  the connected-components driver path (operators/coref.py): one bounded
+  collect and a union-find instead of a distributed loop of ~30 jobs;
+  only an edge set above ``coref.MAX_DRIVER_EDGES`` runs the iterative
+  joins. Triples share the same recompute-from-state shape and are left
+  to the batch pipeline (plans/kg.py).
 
 CDC repair: when the tick range carries merge-on-read row deltas
 (transcript corrections via ``merge_upsert_iceberg_mor(key='conv_id')``,
 GDPR erasures via ``delete_iceberg_where``), the pure append-delta can't
 express them, so the tick switches to conversation-granular repair:
 ``changed_keys_iceberg`` recovers every touched conv_id from the range's
-change files (O(changed files)), the per-turn stages re-run over those
+change files (O(changed files); evaluated once per tick and persisted for
+the scan and both replace commits), the per-turn stages re-run over those
 conversations' CURRENT turns only, and each derived table replaces those
 conv groups in ONE atomic MOR commit (``mor_replace_keys`` — equality-
 delete the group, append its recomputed rows; a conversation erased at
@@ -41,7 +50,6 @@ iceberg_sink, driven from table metadata instead of a side checkpoint.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ner_spark.iceberg.spark_io import (
     changed_keys_iceberg,
@@ -52,8 +60,12 @@ from ner_spark.iceberg.spark_io import (
 )
 from ner_spark.iceberg.table import IcebergLocalTable
 from ner_spark.nlp.stage import detect_mentions
-from ner_spark.operators.coref import canonical_map, coref_edges
+from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
+
+# Widest CDC repair whose conv_id keys are collected to the driver and
+# pushed into the source scan as an IN list.
+MAX_IN_KEYS = 10_000
 
 
 def _last_source_snapshot(mentions_loc: str) -> int | None:
@@ -89,13 +101,14 @@ def incremental_kg_update(
     from_id = _last_source_snapshot(mentions_loc)
 
     repair_keys = None  # non-None → CDC repair tick (corrections/deletes)
-    if from_id == to_id:
-        delta = None  # tick already applied (idempotent re-run)
-    elif from_id is None:
-        delta = read_iceberg(spark, transcripts_loc)  # first tick: full
-    else:
-        ops = src.operations_between(from_id, to_id)
-        if "delete" in ops:
+    cached: list[DataFrame] = []  # persisted for this tick only
+    processed = 0
+    try:
+        if from_id == to_id:
+            delta = None  # tick already applied (idempotent re-run)
+        elif from_id is None:
+            delta = read_iceberg(spark, transcripts_loc)  # first tick: full
+        elif "delete" in src.operations_between(from_id, to_id):
             # the range carries MOR row deltas (corrected conversations,
             # GDPR erasures) — a pure append-delta cannot express them.
             # Repair at conversation granularity: every conv_id touched
@@ -106,16 +119,21 @@ def incremental_kg_update(
             # commit). Cost is O(changed conversations), not O(table).
             repair_keys = changed_keys_iceberg(
                 spark, transcripts_loc, from_id, "conv_id", to_id
-            )
-            # O(changed conversations) by construction, so the key list
-            # is collectable — and as a pushed-down IN predicate it
-            # prunes the snapshot scan through the table's partition
+            ).persist()
+            cached.append(repair_keys)
+            # up to MAX_IN_KEYS keys go into the scan as a pushed-down IN
+            # predicate, which prunes it through the table's partition
             # spec (bucket(N, conv_id) layout → only the touched buckets
             # are read; the repair becomes O(1/N of table) in I/O, not
-            # just in compute). Very wide repairs fall back to the
-            # broadcast semi-join over the full scan.
-            keys = [r["conv_id"] for r in repair_keys.collect()]
-            if len(keys) <= 10_000:
+            # just in compute). The collect is bounded, so a very wide
+            # repair never lands on the driver: it falls back to a plain
+            # semi-join over the full scan, which AQE broadcasts or
+            # shuffles by the keys' measured size.
+            keys = [
+                r["conv_id"]
+                for r in repair_keys.limit(MAX_IN_KEYS + 1).collect()
+            ]
+            if len(keys) <= MAX_IN_KEYS:
                 delta = read_iceberg(
                     spark, transcripts_loc, snapshot_id=to_id,
                     filters=[("conv_id", "in", keys)],
@@ -123,62 +141,57 @@ def incremental_kg_update(
             else:
                 delta = read_iceberg(
                     spark, transcripts_loc, snapshot_id=to_id
-                ).join(F.broadcast(repair_keys), "conv_id")
+                ).join(repair_keys, "conv_id", "left_semi")
         else:
             delta = read_iceberg_incremental(
                 spark, transcripts_loc, from_id, to_id
             )
 
-    processed = 0
-    if delta is not None:
-        men_delta = detect_mentions(delta, gazetteer_pdf, spark)
-        gaz_n = gazetteer_norm(spark, gazetteer_pdf)
-        links_delta = link_mentions(men_delta, gaz_n, entity_embeddings)
-        # crash-safe commit order: links first, mentions (whose stamp
-        # DRIVES delta derivation) last. A crash between the two leaves
-        # the mentions stamp un-advanced, so the rerun recomputes the
-        # same delta — and the links stamp (already at to_id) tells it
-        # to skip the links append instead of double-ingesting the batch.
-        if repair_keys is not None:
-            if _last_source_snapshot(links_loc) != to_id:
+        if delta is not None:
+            delta = delta.persist()
+            men_delta = detect_mentions(delta, gazetteer_pdf, spark).persist()
+            cached += [delta, men_delta]
+            gaz_n = gazetteer_norm(spark, gazetteer_pdf)
+            links_delta = link_mentions(men_delta, gaz_n, entity_embeddings)
+            # crash-safe commit order: links first, mentions (whose stamp
+            # DRIVES delta derivation) last. A crash between the two
+            # leaves the mentions stamp un-advanced, so the rerun
+            # recomputes the same delta — and the links stamp (already at
+            # to_id) tells it to skip the links append instead of
+            # double-ingesting the batch.
+            if repair_keys is not None:
+                if _last_source_snapshot(links_loc) != to_id:
+                    mor_replace_keys(
+                        spark, links_loc, repair_keys, links_delta, "conv_id",
+                        summary={"source-snapshot-id": to_id},
+                    )
                 mor_replace_keys(
-                    spark, links_loc, repair_keys, links_delta, "conv_id",
+                    spark, mentions_loc, repair_keys, men_delta, "conv_id",
                     summary={"source-snapshot-id": to_id},
                 )
-            mor_replace_keys(
-                spark, mentions_loc, repair_keys, men_delta, "conv_id",
-                summary={"source-snapshot-id": to_id},
-            )
-        else:
-            if _last_source_snapshot(links_loc) != to_id:
+            else:
+                if _last_source_snapshot(links_loc) != to_id:
+                    write_iceberg(
+                        links_delta, links_loc, mode="append",
+                        summary={"source-snapshot-id": to_id},
+                    )
                 write_iceberg(
-                    links_delta, links_loc, mode="append",
+                    men_delta, mentions_loc, mode="append",
                     summary={"source-snapshot-id": to_id},
                 )
-            write_iceberg(
-                men_delta, mentions_loc, mode="append",
-                summary={"source-snapshot-id": to_id},
-            )
-        processed = delta.count()
+            processed = delta.count()
+    finally:
+        for df in cached:
+            df.unpersist()
 
-    # global refresh from accumulated links (cheap tail)
+    # global refresh from accumulated links
     links = read_iceberg(spark, links_loc)
-    edges = coref_edges(links)
-    canon = canonical_map(links, edges)
-    entities = (
-        links.join(F.broadcast(canon), "entity_id")
-        .groupBy(F.col("canonical_id").alias("entity_id"))
-        .agg(
-            F.array_sort(F.collect_set("norm_surface")).alias("aliases"),
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.mode("ner_type").alias("ner_type"),
-        )
-    )
+    canon = canonical_map(links, coref_edges(links))
     return {
         "processed_rows": processed,
         "from_snapshot": from_id,
         "to_snapshot": to_id,
         "mentions": read_iceberg(spark, mentions_loc),
         "links": links,
-        "entities": entities,
+        "entities": entity_rollup(links, canon),
     }

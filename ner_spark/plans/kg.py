@@ -5,7 +5,8 @@ materialization, per-partition lineage + metrics, and idempotent resume
 Stage graph:
   transcripts → [repartition by conv_id] → fused NLP mapInPandas → mentions
   → B1 broadcast gazetteer join → B2 link-score join (AQE skew) → B13 top-1
-  → links → B3/B11 coref edges → B10 iterative CC → canonical map
+  → links → B3/B11 coref edges → B10 CC (driver union-find for small edge
+  sets, iterative joins above) → canonical map
   → B5 triples (REL/COOC pairs + TOOL as-of) → canonicalized triples
   → B8 entity aggregation.
 
@@ -19,7 +20,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ner_spark.nlp.stage import detect_mentions
 from ner_spark.plans.base import (  # noqa: F401 — re-exported for callers
@@ -27,7 +27,7 @@ from ner_spark.plans.base import (  # noqa: F401 — re-exported for callers
     StagedPipeline,
     lineage_rows,
 )
-from ner_spark.operators.coref import canonical_map, coref_edges
+from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
 from ner_spark.operators.triples import (
     canonicalize_triples,
@@ -107,16 +107,7 @@ class KGPipeline(StagedPipeline):
                 canon,
             ),
         )
-        entities = self._stage(
-            "entities",
-            lambda: links.join(F.broadcast(canon), "entity_id")
-            .groupBy(F.col("canonical_id").alias("entity_id"))
-            .agg(
-                F.array_sort(F.collect_set("norm_surface")).alias("aliases"),
-                F.count(F.lit(1)).alias("n_mentions"),
-                F.mode("ner_type").alias("ner_type"),
-            ),
-        )
+        entities = self._stage("entities", lambda: entity_rollup(links, canon))
         self._join_lineage()
         return {
             "mentions": mentions,

@@ -1223,17 +1223,19 @@ _CLUSTERS_CTE = f"""pairs AS ({_pairs_sql('documents')}),
 )
 def dedup_cluster(spark, sf):
     """Near-dup clustering: MinHash-LSH candidate pairs (same recipe as
-    dedup_minhash_lsh) fed through the iterative large-star/small-star
-    connected-components operator (operators/coref.py, SURVEY.md §2.6
-    B10); cluster_id = min doc_id of the component — the canonical
+    dedup_minhash_lsh) fed through the connected-components operator
+    (operators/coref.py, SURVEY.md §2.6 B10: a driver union-find for
+    small edge sets, iterative large-star/small-star joins above);
+    cluster_id = min doc_id of the component — the canonical
     "keep one representative per duplicate cluster" step of a dedup
     pipeline.
 
     This is the only DuckDB-differential exercise of the CC operator
     itself (oracle = recursive-CTE transitive closure, an independent
     fixed-point formulation), complementing the pytest partition-
-    refinement property tests. Scale shape: CC is O(log n) rounds of
-    equi-join + groupBy — no transitive-closure materialization, which
+    refinement property tests. Scale shape: above the driver cap, CC is
+    O(log n) rounds of equi-join + groupBy — no transitive-closure
+    materialization, which
     at 100 TB would be quadratic in cluster size; the CTE closure is
     oracle-only."""
     from ner_spark.operators.coref import connected_components

@@ -759,3 +759,16 @@ def test_jpeg_fill_bytes_before_markers():
     prog = encode_jpeg_progressive(img)
     pfill = prog[:2] + b"\xff\xff\xff" + prog[2:]
     assert np.array_equal(decode_jpeg(pfill), decode_jpeg(prog))
+
+
+@pytest.mark.parametrize(
+    "decode", [decode_jpeg_gray, decode_jpeg], ids=["gray", "general"]
+)
+def test_jpeg_truncated_marker_raises_value_error(decode):
+    """A stream that ends in a marker's 0xFF prefix, with or without fill
+    bytes before it, is malformed input: ValueError, not IndexError."""
+    data = encode_jpeg_gray(np.full((8, 8), 77, np.uint8))
+    head = data[: data.index(b"\xff\xdb")]  # SOI + any APPn, up to DQT
+    for tail in (b"\xff", b"\xff\xff"):
+        with pytest.raises(ValueError, match="truncated marker segment"):
+            decode(head + tail)
