@@ -11,11 +11,12 @@ results — no full rebuild. The split follows the stages' algebra:
   accumulated state is byte-equal to a from-scratch build (pinned by
   tests/test_incremental_kg.py).
 - the delta runs through the NLP ``mapInPandas`` exactly once per
-  tick: the delta turns and their mentions are persisted for the tick,
-  so the links commit, the mentions commit and the processed-row count
-  all read the same materialized rows instead of re-deriving them
-  (each re-derivation paid the Python boundary again). They are
-  unpersisted when the tick ends, commit failures included.
+  tick: the delta's mentions are persisted for the tick, so the links
+  commit and the mentions commit read the same materialized rows instead
+  of re-deriving them (each re-derivation paid the Python boundary
+  again). They are unpersisted when the tick ends, commit failures
+  included. The processed-row count is a count of the source scan,
+  which reads no text.
 - canonicalization (coref edges → connected components) and the entity
   rollup are global by nature — a new mention can merge two old
   entities — so they recompute from the ACCUMULATED links table each
@@ -148,9 +149,8 @@ def incremental_kg_update(
             )
 
         if delta is not None:
-            delta = delta.persist()
             men_delta = detect_mentions(delta, gazetteer_pdf, spark).persist()
-            cached += [delta, men_delta]
+            cached.append(men_delta)
             gaz_n = gazetteer_norm(spark, gazetteer_pdf)
             links_delta = link_mentions(men_delta, gaz_n, entity_embeddings)
             # crash-safe commit order: links first, mentions (whose stamp
@@ -179,6 +179,7 @@ def incremental_kg_update(
                     men_delta, mentions_loc, mode="append",
                     summary={"source-snapshot-id": to_id},
                 )
+            # a row count of the source scan reads no text column
             processed = delta.count()
     finally:
         for df in cached:

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import random
 
+from pyspark.sql import functions as F
+
+from ner_spark.operators import coref
 from ner_spark.operators.coref import canonical_map, connected_components
 
 EDGE_SCHEMA = "src_entity string, dst_entity string"
@@ -14,7 +17,7 @@ def _pairs(df) -> set:
     return {(r["entity_id"], r["canonical_id"]) for r in df.collect()}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     rng = random.Random(11)
     chain = [f"c{i:03d}" for i in range(300)]
     rng.shuffle(chain)  # component min sits mid-chain, not at an end
@@ -29,10 +32,36 @@ def test_connected_components_paths_agree(spark):
     df = spark.createDataFrame(edges, EDGE_SCHEMA)
 
     driver = _pairs(connected_components(df))
-    iterative = _pairs(connected_components(df, max_driver_edges=0))
+    monkeypatch.setattr(coref, "MAX_DRIVER_EDGES", 0)
+    iterative = _pairs(connected_components(df))
     want = {(n, "c000") for n in chain}
     want |= {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"), ("e", "c")}
     assert driver == iterative == want
+
+
+def test_iterative_path_evaluates_edges_once(spark, monkeypatch):
+    """The bounded collect and the iterative loop share one evaluation of
+    the edges' upstream: a counting UDF sees each input row once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(x):
+        seen.add(1)
+        return x
+
+    # nondeterministic: the optimizer must not copy the call into the
+    # pushed-down self-loop filter
+    counted = F.udf(count_row, "string").asNondeterministic()
+
+    pairs = [(f"n{i}", f"n{i + 1}") for i in range(40)] + [("n3", "n0")]
+    edges = spark.createDataFrame(pairs, EDGE_SCHEMA).select(
+        counted("src_entity").alias("src_entity"), "dst_entity"
+    )
+    # 1, not 0: Spark rewrites a limit of 1 over a distinct into a plain
+    # limit, which would not evaluate the whole edge set
+    monkeypatch.setattr(coref, "MAX_DRIVER_EDGES", 1)
+    got = _pairs(connected_components(edges))
+    assert got == {(f"n{i}", "n0") for i in range(41)}
+    assert seen.value == len(pairs)
 
 
 def test_canonical_map_covers_singleton_links(spark):
