@@ -913,6 +913,22 @@ def main() -> None:
     spark.stop()
 
 
+def parse_pair(var: str, default: str) -> tuple[int, int]:
+    """The ``lo,hi`` size pair in env var ``var`` (``default`` when
+    unset): exactly two positive ints with lo < hi, else ValueError."""
+    raw = os.environ.get(var, default)
+    try:
+        lo, hi = (int(x) for x in raw.split(","))
+    except ValueError:
+        raise ValueError(
+            f"{var} must be two comma-separated positive ints 'lo,hi', "
+            f"got {raw!r}"
+        ) from None
+    if not 0 < lo < hi:
+        raise ValueError(f"{var} needs 0 < lo < hi, got {raw!r}")
+    return lo, hi
+
+
 def run_scaling() -> None:
     """KG job at N vs 4N cores in fresh JVMs; efficiency to BENCH/BASELINE.md.
 
@@ -936,6 +952,7 @@ def run_scaling() -> None:
       JVMs; min wall is reported (page-cache warm-up + GC noise otherwise
       dominates single runs at +/-20%).
     """
+    pair = parse_pair("SPARK_GRAFT_SCALE_PAIR", "2,8")
     from fixtures.gen import ensure_fixture_dir
 
     # scale3 (~14.6M turns) is the canonical north-rule input: the
@@ -948,9 +965,6 @@ def run_scaling() -> None:
     # 'scale' input ~0.78-contended for exactly that reason — don't
     # default to them.
     size = os.environ.get("SPARK_GRAFT_SCALE_SIZE", "scale3")
-    pair = tuple(
-        int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8").split(",")
-    )
     repeat = int(os.environ.get("SPARK_GRAFT_SCALE_REPEAT", "2"))
     ensure_fixture_dir(size)
     results = {}
@@ -1076,14 +1090,13 @@ def run_scaling_cluster() -> None:
     (7168/executor), SPARK_GRAFT_SCALE_SIZE / _REPEAT / _SETTLE shared
     with --scaling.
     """
+    # a bad pair must fail before the fixture build and the zip, not
+    # after the expensive runs
+    pair = parse_pair("SPARK_GRAFT_CLUSTER_PAIR", "2,8")
     from fixtures.gen import ensure_fixture_dir
     from ner_spark.deploy import build_pyfiles_zip
 
     size = os.environ.get("SPARK_GRAFT_SCALE_SIZE", "scale3")
-    pair = tuple(
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_CLUSTER_PAIR", "2,8").split(",")
-    )
     cores = int(os.environ.get("SPARK_GRAFT_CLUSTER_CORES", "2"))
     mem_mb = int(os.environ.get("SPARK_GRAFT_CLUSTER_MEM_MB", "7168"))
     repeat = int(os.environ.get("SPARK_GRAFT_SCALE_REPEAT", "2"))

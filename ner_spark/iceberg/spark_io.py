@@ -36,6 +36,7 @@ from ner_spark.iceberg.table import (
     IcebergLocalTable,
     collect_parquet_stats,
     partition_result_type,
+    schema_to_spark_ddl,
 )
 
 
@@ -297,13 +298,28 @@ def _scan_files(
     return reduce(DataFrame.unionByName, parts)
 
 
+# The spec's position-delete file schema (the optional ``row`` column is
+# never written here). Delete files are read with a known schema: letting
+# Spark infer it costs one footer read per file.
+_POS_DELETE_DDL = "file_path string, pos bigint"
+
+
 def _pos_delete_frame(spark: SparkSession, pos: list[DataFile]) -> DataFrame:
     """(file_path, pos) pairs from position-delete files, aliased to the
     ``__fp``/``__pos`` names the scan's ``_metadata`` projection uses."""
-    return spark.read.parquet(*[d.path for d in pos]).select(
+    paths = [d.path for d in pos]
+    return spark.read.schema(_POS_DELETE_DDL).parquet(*paths).select(
         _strip_scheme(F.col("file_path")).alias("__fp"),
         F.col("pos").alias("__pos"),
     )
+
+
+def _eq_delete_ddl(ids, struct: dict) -> tuple[list[str], str]:
+    """(key column names, Spark DDL) of an equality-delete file: the
+    table schema's ``equality_ids`` fields."""
+    by_id = {f["id"]: f for f in struct["fields"]}
+    fields = [by_id[i] for i in ids]
+    return [f["name"] for f in fields], schema_to_spark_ddl({"fields": fields})
 
 
 def _eq_delete_groups(spark: SparkSession, eqs: list[DataFile], struct: dict):
@@ -311,14 +327,13 @@ def _eq_delete_groups(spark: SparkSession, eqs: list[DataFile], struct: dict):
     ``__d_``-prefixed keys + ``__dseq``). One definition of how equality
     delete files turn into joinable frames — the MOR read (anti) and the
     changelog (semi) must agree on it exactly."""
-    id2name = {f["id"]: f["name"] for f in struct["fields"]}
     groups: dict[tuple, list[DataFile]] = {}
     for d in eqs:
         groups.setdefault(tuple(d.equality_ids or ()), []).append(d)
     for ids, group in groups.items():
-        names = [id2name[i] for i in ids]
+        names, ddl = _eq_delete_ddl(ids, struct)
         parts = [
-            spark.read.parquet(d.path)
+            spark.read.schema(ddl).parquet(d.path)
             .select(*[F.col(c).alias(f"__d_{c}") for c in names])
             .withColumn("__dseq", F.lit(d.sequence_number))
             for d in group
@@ -1205,7 +1220,8 @@ def changed_keys_iceberg(
       table.
     """
     t = IcebergLocalTable(location)
-    ddl = t.spark_ddl()
+    struct = t._schema_struct(t.metadata())
+    ddl = schema_to_spark_ddl(struct)
     parts: list[DataFrame] = []
     for ch in t.snapshot_changes(from_snapshot_id, to_snapshot_id):
         if ch["data_files"]:
@@ -1221,10 +1237,7 @@ def changed_keys_iceberg(
         pos = [d for d in ch["delete_files"] if d.content == 1]
         eqs = [d for d in ch["delete_files"] if d.content == 2]
         if pos:
-            pdel = spark.read.parquet(*[d.path for d in pos]).select(
-                _strip_scheme(F.col("file_path")).alias("__fp"),
-                F.col("pos").alias("__pos"),
-            )
+            pdel = _pos_delete_frame(spark, pos)
             named = sorted({r["__fp"] for r in pdel.select("__fp")
                             .distinct().collect()})
             raw = _scan_files(
@@ -1235,8 +1248,9 @@ def changed_keys_iceberg(
                 .select(key)
             )
         for d in eqs:
-            kdf = spark.read.parquet(d.path)
-            if key in kdf.columns:
+            names, eq_ddl = _eq_delete_ddl(d.equality_ids or (), struct)
+            kdf = spark.read.schema(eq_ddl).parquet(d.path)
+            if key in names:
                 parts.append(kdf.select(key))
                 continue
             parent = ch["snapshot"].get("parent-snapshot-id")
@@ -1244,7 +1258,7 @@ def changed_keys_iceberg(
                 continue  # delete against an empty table matched nothing
             prior = read_iceberg(spark, location, snapshot_id=parent)
             cond = None
-            for c in kdf.columns:
+            for c in names:
                 e = prior[c].eqNullSafe(kdf[c])
                 cond = e if cond is None else (cond & e)
             parts.append(

@@ -3,7 +3,8 @@ materialization, per-partition lineage + metrics, and idempotent resume
 (SURVEY.md §4.5; BASELINE.json:14).
 
 Stage graph:
-  transcripts → [repartition by conv_id] → fused NLP mapInPandas → mentions
+  transcripts → [profile + salted repartition by conv_id] → fused NLP
+  mapInPandas → mentions
   → B1 broadcast gazetteer join → B2 link-score join (AQE skew) → B13 top-1
   → links → B3/B11 coref edges → B10 CC (driver union-find for small edge
   sets, iterative joins above) → canonical map
@@ -13,7 +14,11 @@ Stage graph:
 When ``warehouse`` is given, each stage commits to
 ``{warehouse}/{stage}`` with a manifest (run_id) and a lineage row set;
 on resume, completed stages are read back instead of recomputed — the
-kill-and-rerun test in tests/test_resume.py relies on this.
+kill-and-rerun test in tests/test_resume.py relies on this. The partition
+profile pass and the NLP set-up (model/gazetteer broadcasts, cached per
+application in nlp/stage.py) run only when ``mentions`` is built, and the
+gazetteer frame only when ``links`` is, so a full read-back pays none of
+them.
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ from ner_spark.plans.base import (  # noqa: F401 — re-exported for callers
 )
 from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
+from ner_spark.operators.partitioning import salted_repartition
 from ner_spark.operators.triples import (
     canonicalize_triples,
     rel_cooc_triples,
@@ -62,22 +68,18 @@ class KGPipeline(StagedPipeline):
     # -- pipeline -------------------------------------------------------------
     def run(self, transcripts: DataFrame) -> dict[str, DataFrame]:
         spark = self.spark
-        # tx_raw feeds the triple builders: the pair join re-shuffles on
-        # (conv_id, turn_idx) and the tool as-of re-windows on conv_id, so
-        # routing them through the salted repartition below would re-run a
-        # full-table shuffle twice for a partitioning neither consumer
-        # keeps — and it would block the scan-level projection/filter
-        # pushdown (text-only / role='tool') that the raw scan gets
-        tx_raw = transcripts
-        tx = transcripts
-        if self.n_partitions:
-            # explicit partitioning by conv_id with hot-conversation
-            # salting [B:14]: a profile pass finds conversations big
-            # enough to pin a straggler partition and spreads only those
-            # across salt buckets (operators/partitioning.py)
-            from ner_spark.operators.partitioning import salted_repartition
 
-            tx = salted_repartition(tx, self.n_partitions)
+        def mentions_build():
+            # explicit partitioning by conv_id with hot-conversation
+            # salting [B:14]: a profile pass finds conversations big enough
+            # to pin a straggler partition and spreads only those across
+            # salt buckets (operators/partitioning.py). The profile job and
+            # the NLP broadcasts run here, inside the stage, so a resume
+            # that reads mentions back pays for neither.
+            tx = transcripts
+            if self.n_partitions:
+                tx = salted_repartition(tx, self.n_partitions)
+            return detect_mentions(tx, self.gaz_pdf, spark, model=self.model)
 
         # the mentions stage materializes the FULL table — ctx_emb (packed
         # 8*EMB_DIM-byte binary) included — and the link stage reads it
@@ -89,20 +91,27 @@ class KGPipeline(StagedPipeline):
         # parquet write+read of the same rows costs ~2s and scales with
         # cores. Bonus: a resume where mentions committed but links did
         # not now reads ctx_emb back instead of recomputing the NLP stage.
-        men_full = detect_mentions(tx, self.gaz_pdf, spark, model=self.model)
-        men_tbl = self._stage("mentions", lambda: men_full)
+        men_tbl = self._stage("mentions", mentions_build)
         mentions = men_tbl.drop("ctx_emb")
-        gaz_n = gazetteer_norm(spark, self.gaz_pdf)
         links = self._stage(
-            "links", lambda: link_mentions(men_tbl, gaz_n, self.emb)
+            "links",
+            lambda: link_mentions(
+                men_tbl, gazetteer_norm(spark, self.gaz_pdf), self.emb
+            ),
         )
         edges = self._stage("edges", lambda: coref_edges(links))
         canon = self._stage("entities_canon", lambda: canonical_map(links, edges))
+        # the triple builders read the raw transcripts: the pair join
+        # re-shuffles on (conv_id, turn_idx) and the tool as-of re-windows
+        # on conv_id, so the salted repartition would add a full-table
+        # shuffle neither consumer keeps — and it would block the
+        # scan-level projection/filter pushdown (text-only / role='tool')
+        # that the raw scan gets
         triples = self._stage(
             "triples",
             lambda: canonicalize_triples(
-                rel_cooc_triples(links, tx_raw).unionByName(
-                    tool_triples(links, tx_raw, self.gaz_pdf, spark)
+                rel_cooc_triples(links, transcripts).unionByName(
+                    tool_triples(links, transcripts, self.gaz_pdf, spark)
                 ),
                 canon,
             ),

@@ -34,8 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ner_spark import spec
 from ner_spark.nlp import vectorized as V
-from ner_spark.nlp.model import build_model
-from ner_spark.nlp.stage import MENTIONS_SCHEMA
+from ner_spark.nlp.stage import MENTIONS_SCHEMA, nlp_broadcasts
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -121,33 +120,24 @@ def streaming_links(
     spark: SparkSession,
 ) -> DataFrame:
     """dedup → fused NLP+link mapInPandas over the stream (one Arrow trip)."""
-    sc = spark.sparkContext
-    model = build_model()
-    bc = sc.broadcast(
-        {
-            "WT": np.ascontiguousarray(model["W"].T),
-            "T": model["T"],
-            "start": model["start"],
-            "gaz": V.GazMatcher(gazetteer_pdf),
-            "cand": _candidate_pdf(gazetteer_pdf, emb_pdf),
-        }
-    )
+    bc_model, bc_gaz = nlp_broadcasts(spark, gazetteer_pdf)
+    bc_cand = spark.sparkContext.broadcast(_candidate_pdf(gazetteer_pdf, emb_pdf))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = bc.value
+        m, gaz, cand = bc_model.value, bc_gaz.value, bc_cand.value
         for pdf in batches:
-            yield _link_pandas(_mentions_pdf(pdf, b), b["cand"])
+            yield _link_pandas(_mentions_pdf(pdf, m, gaz), cand)
 
     return deduped(stream).select("conv_id", "turn_idx", "text").mapInPandas(
         fn, LINKS_SCHEMA
     )
 
 
-def _mentions_pdf(pdf: pd.DataFrame, b: dict) -> pd.DataFrame:
+def _mentions_pdf(pdf: pd.DataFrame, m: dict, gaz: V.GazMatcher) -> pd.DataFrame:
     """NLP over one Arrow batch → mentions pandas frame (same layout as
     ner_spark.nlp.stage.detect_mentions output)."""
     texts = pdf["text"].to_numpy(dtype=object)
-    men, _ = V.nlp_batch(texts, b["gaz"], b["WT"], b["T"], b["start"])
+    men, _ = V.nlp_batch(texts, gaz, m["WT"], m["T"], m["start"])
     rows = men["row"]
     types = np.array(spec.NER_TYPES, dtype=object)
     return pd.DataFrame(
@@ -203,16 +193,7 @@ def stateful_incremental_mentions(
     source replays / overlapping micro-batches (stronger than watermark
     dedup: no time bound) while the state stays O(#gaps), not
     O(conversation length) — for any starting index or arrival order."""
-    sc = spark.sparkContext
-    model = build_model()
-    bc = sc.broadcast(
-        {
-            "WT": np.ascontiguousarray(model["W"].T),
-            "T": model["T"],
-            "start": model["start"],
-            "gaz": V.GazMatcher(gazetteer_pdf),
-        }
-    )
+    bc_model, bc_gaz = nlp_broadcasts(spark, gazetteer_pdf)
 
     def fn(
         key: Tuple[Any, ...],
@@ -224,7 +205,7 @@ def stateful_incremental_mentions(
             ivs = list(zip(starts, ends))
         else:
             ivs = []
-        b = bc.value
+        m, gaz = bc_model.value, bc_gaz.value
         for pdf in batches:
             # state filters cross-batch replays; drop_duplicates filters
             # copies arriving inside the same micro-batch chunk
@@ -237,7 +218,7 @@ def stateful_incremental_mentions(
             if not len(fresh):
                 continue
             ivs = _merge_intervals(ivs, [int(t) for t in fresh["turn_idx"]])
-            out = _mentions_pdf(fresh, b).drop(columns=["ctx_emb"])
+            out = _mentions_pdf(fresh, m, gaz).drop(columns=["ctx_emb"])
             if len(out):
                 yield out
         state.update(([s for s, _ in ivs], [e for _, e in ivs]))

@@ -8,6 +8,8 @@ mid-run after committing mentions+links). The resumed run must
   2. reproduce byte-for-byte the same triples as an uninterrupted run,
   3. leave a lineage table covering every stage, with rows from BOTH runs
      merged (completed stages keep their original lineage rows).
+A resume that finds every stage committed pays no partition profile pass
+and no NLP set-up.
 """
 
 from __future__ import annotations
@@ -20,6 +22,9 @@ import pandas as pd
 import pytest
 
 from ner_spark import io as nio
+from ner_spark.nlp import stage as nlp_stage
+from ner_spark.nlp import vectorized as V
+from ner_spark.operators import partitioning
 from ner_spark.plans.kg import build_kg
 
 STAGES = ["mentions", "links", "edges", "entities_canon", "triples", "entities"]
@@ -122,3 +127,33 @@ def test_new_run_id_recomputes(spark, small_inputs, warehouse):
     assert sorted(
         os.path.basename(p) for p in glob.glob(os.path.join(warehouse, "lineage_*"))
     ) == ["lineage_r1.parquet", "lineage_r2.parquet"]
+
+
+def test_full_readback_pays_no_nlp_setup(spark, small_inputs, tmp_path, monkeypatch):
+    """A resume that finds every stage committed reads them back and runs
+    neither the partition profile pass nor any NLP set-up."""
+    run = lambda: build_kg(  # noqa: E731
+        spark,
+        small_inputs["transcripts"],
+        small_inputs["gazetteer_pdf"],
+        small_inputs["entity_embeddings"],
+        warehouse=str(tmp_path),
+        run_id="rp",
+        resume=True,
+        n_partitions=4,
+    )
+    full = _triples_pdf(run())
+    stamps = {s: _manifest(str(tmp_path), s)["completed_at"] for s in STAGES}
+
+    def refuse(*_a, **_k):
+        raise AssertionError("NLP set-up ran on a full read-back")
+
+    monkeypatch.setattr(partitioning, "profile_hot_keys", refuse)
+    monkeypatch.setattr(V, "GazMatcher", refuse)
+    # an empty broadcast cache: any NLP set-up would build a matcher
+    monkeypatch.setitem(nlp_stage._CACHE, "app", None)
+    resumed = _triples_pdf(run())
+
+    for s in STAGES:
+        assert _manifest(str(tmp_path), s)["completed_at"] == stamps[s], s
+    pd.testing.assert_frame_equal(full, resumed)
