@@ -36,8 +36,8 @@ def calls(monkeypatch):
 @pytest.fixture
 def tx(small_inputs):
     t = small_inputs["transcripts"]
-    convs = [r[0] for r in t.select("conv_id").distinct().orderBy("conv_id").limit(20).collect()]
-    return t.where(t.conv_id.isin(convs))
+    first = t.select("conv_id").distinct().orderBy("conv_id").limit(20)
+    return t.join(first, "conv_id")
 
 
 def _mentions(tx, gaz, spark, **kw) -> pd.DataFrame:
