@@ -143,75 +143,6 @@ def detect_mentions(
     )
 
 
-def detect_mentions_arrow(
-    transcripts: DataFrame, gazetteer_pdf: pd.DataFrame, spark: SparkSession
-) -> DataFrame:
-    """detect_mentions over ``mapInArrow`` (round-4: VERDICT r03 item 4
-    A/B): same fused numpy kernel, but the Arrow record batches are
-    consumed and produced directly — no pandas DataFrame wrapper on
-    either side of the boundary. The measured differences vs the
-    mapInPandas path (same batch sizes, same kernel):
-
-    - input: ``conv_id``/``turn_idx`` stay Arrow arrays and the
-      per-mention row gather is ``Array.take`` (C++), not a numpy object
-      round-trip;
-    - output: ``ctx_emb`` is built as ONE zero-copy FixedSizeBinary
-      array over the contiguous (n, EMB_DIM) float64 block, then cast to
-      binary — the pandas path materializes a python ``bytes`` object
-      per mention (~10^6 allocations at bench scale);
-    - no pandas→Arrow inference pass on the 10-column output.
-
-    Byte-identity gates (tests/test_contract.py parity test) pin both
-    paths to identical output."""
-    import pyarrow as pa
-
-    bc_model, bc_gaz = nlp_broadcasts(spark, gazetteer_pdf)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        m = bc_model.value
-        gaz = bc_gaz.value
-        for rb in batches:
-            cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            texts = cols["text"].to_numpy(zero_copy_only=False)
-            men, _ = V.nlp_batch(texts, gaz, m["WT"], m["T"], m["start"])
-            rows = pa.array(men["row"], type=pa.int64())
-            n = len(men["row"])
-            ctx = np.ascontiguousarray(men["ctx"], dtype="<f8")
-            width = ctx.shape[1] * 8
-            ctx_fixed = pa.FixedSizeBinaryArray.from_buffers(
-                pa.binary(width), n, [None, pa.py_buffer(ctx.data)]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["conv_id"].take(rows),
-                    cols["turn_idx"].take(rows).cast(pa.int32()),
-                    pa.array(men["sent_in_turn"], type=pa.int32()),
-                    pa.array(men["start"], type=pa.int32()),
-                    pa.array(men["end"], type=pa.int32()),
-                    pa.array(men["surface"], type=pa.string()),
-                    pa.array(
-                        [spec.norm_surface(s) for s in men["surface"]],
-                        type=pa.string(),
-                    ),
-                    pa.array(
-                        _TYPES[men["type_code"]] if n else [],
-                        type=pa.string(),
-                    ),
-                    pa.array(men["score"], type=pa.float64()),
-                    ctx_fixed.cast(pa.binary()),
-                ],
-                names=[
-                    "conv_id", "turn_idx", "sent_idx", "start", "end",
-                    "surface", "norm_surface", "ner_type", "score",
-                    "ctx_emb",
-                ],
-            )
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-        fn, MENTIONS_SCHEMA
-    )
-
-
 def tokens_table(transcripts: DataFrame) -> DataFrame:
     """Token materialization for the byte-identity contract (A7/B12)."""
 

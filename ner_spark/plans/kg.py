@@ -19,6 +19,13 @@ profile pass and the NLP set-up (model/gazetteer broadcasts, cached per
 application in nlp/stage.py) run only when ``mentions`` is built, and the
 gazetteer frame only when ``links`` is, so a full read-back pays none of
 them.
+
+``n_partitions`` is an upper bound on the NLP pass's task count. The
+profile pass also estimates the input's row count, and the pass runs
+min(n_partitions, max(defaultParallelism, ceil(rows / maxRecordsPerBatch)))
+tasks (operators/partitioning.py): at least one full Arrow batch per
+Python task, since each task pays a fixed boundary cost. Fewer NLP tasks
+also mean fewer mentions files, and so fewer linking scan tasks.
 """
 
 from __future__ import annotations
@@ -27,11 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ner_spark.nlp.stage import detect_mentions
-from ner_spark.plans.base import (  # noqa: F401 — re-exported for callers
-    LINEAGE_COLS,
-    StagedPipeline,
-    lineage_rows,
-)
+from ner_spark.plans.base import StagedPipeline
 from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
 from ner_spark.operators.partitioning import salted_repartition
@@ -73,9 +76,10 @@ class KGPipeline(StagedPipeline):
             # explicit partitioning by conv_id with hot-conversation
             # salting [B:14]: a profile pass finds conversations big enough
             # to pin a straggler partition and spreads only those across
-            # salt buckets (operators/partitioning.py). The profile job and
-            # the NLP broadcasts run here, inside the stage, so a resume
-            # that reads mentions back pays for neither.
+            # salt buckets (operators/partitioning.py). The same profile
+            # sizes the pass to its input (n_partitions is an upper bound).
+            # The profile job and the NLP broadcasts run here, inside the
+            # stage, so a resume that reads mentions back pays for neither.
             tx = transcripts
             if self.n_partitions:
                 tx = salted_repartition(tx, self.n_partitions)

@@ -43,8 +43,24 @@ DEFAULTS = {
     # 128 files x 6 stages is a measurable serial cost per pipeline run
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
 }
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: a quarter of the
+    host's RAM (``MemTotal``), rounded to whole GB and clamped to
+    1g-32g. A fixed 32g let the local-mode JVM (driver and executors in
+    one heap) grow past the physical RAM of a 15 GB host until the
+    kernel killed it. Without a readable MemTotal (not Linux) the 32g
+    cap is used."""
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return "32g"
+    return f"{max(1, min(32, round(kib / (4 << 20))))}g"
 
 
 def kg_task_cpus(master: str | None = None) -> str:
@@ -87,6 +103,9 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = SparkSession.builder.master(master or f"local[{cpus}]").appName(app)
     conf = dict(DEFAULTS)
+    conf["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+    )
     # shuffle/spill directory override. On a real cluster every executor
     # writes shuffle data to its OWN node-local disk, so aggregate shuffle
     # bandwidth scales with the node count; this sandbox is one box with

@@ -10,11 +10,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from ner_spark.nlp.stage import (
-    detect_mentions,
-    detect_mentions_arrow,
-    tokens_table,
-)
+from ner_spark.nlp.stage import detect_mentions, tokens_table
 
 KEY = ["conv_id", "turn_idx"]
 
@@ -51,27 +47,6 @@ def test_mention_parity(spark, small_inputs, oracle_small):
     cols = ["conv_id", "turn_idx", "sent_idx", "start", "end", "surface",
             "ner_type", "score"]
     assert _norm(got, cols).equals(_norm(oracle_small["mentions"], cols))
-
-
-def test_mention_arrow_path_byte_identical(spark, small_inputs):
-    """detect_mentions_arrow (the mapInArrow A/B variant, round-4 item 4)
-    must emit byte-identical output to the shipped mapInPandas path —
-    ALL 10 columns including the packed ctx_emb bytes, which the Arrow
-    path builds as one zero-copy FixedSizeBinary block."""
-    key = ["conv_id", "turn_idx", "sent_idx", "start", "end"]
-    a = (
-        detect_mentions(
-            small_inputs["transcripts"], small_inputs["gazetteer_pdf"], spark
-        )
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    b = (
-        detect_mentions_arrow(
-            small_inputs["transcripts"], small_inputs["gazetteer_pdf"], spark
-        )
-        .toPandas().sort_values(key).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
 
 
 def test_link_parity(kg_small, oracle_small):

@@ -6,7 +6,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ner_spark.operators.partitioning import profile_hot_keys, salted_repartition
+from ner_spark.operators.partitioning import (
+    profile_hot_keys,
+    profile_keys,
+    salted_repartition,
+    sized_partitions,
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +35,24 @@ def _partition_sizes(df):
 
 def test_profile_finds_hot(skewed):
     assert profile_hot_keys(skewed, hot_k=8, min_rows=1000) == ["hot"]
+    # unsampled, the grand-total row is the exact row count
+    assert profile_keys(skewed, hot_k=8, min_rows=1000, sample_mod=1) == (
+        ["hot"], 10_000
+    )
+    assert profile_keys(skewed.where("false")) == ([], 0)
+
+
+def test_sizing_rule():
+    """n_partitions is an upper bound: one task per core, at least one full
+    4096-row Arrow batch per task."""
+    # bench.py's sf0.1 build: 1.01M turns keep all 128 tasks
+    assert sized_partitions(128, 1_010_000, 32, 4096) == 128
+    # perfbench's ~5.3k turns on 4 cores: 4 tasks, not 16
+    assert sized_partitions(16, 5_300, 4, 4096) == 4
+    assert sized_partitions(64, 100_000, 4, 4096) == 25
+    assert sized_partitions(2, 0, 8, 4096) == 2
+    # an unlimited batch size (<= 0) leaves n_partitions as it is
+    assert sized_partitions(16, 5_300, 4, 0) == 16
 
 
 def test_salting_reduces_skew(skewed):
@@ -60,8 +83,10 @@ def test_no_hot_keys_plain_repartition(spark):
     assert "__salt" not in out.columns
 
 
-def test_pipeline_output_invariant_to_salting(spark, small_inputs, kg_small):
-    """build_kg with explicit salted partitioning == unpartitioned run."""
+def test_pipeline_output_invariant_to_salting(spark, small_inputs, kg_small, tmp_path):
+    """build_kg with explicit salted partitioning == unpartitioned run, and
+    the NLP pass is sized to its ~2k-turn input: the committed mentions
+    table has at most one data file per core, not n_partitions."""
     from ner_spark.plans.kg import build_kg
 
     out = build_kg(
@@ -69,8 +94,11 @@ def test_pipeline_output_invariant_to_salting(spark, small_inputs, kg_small):
         small_inputs["transcripts"],
         small_inputs["gazetteer_pdf"],
         small_inputs["entity_embeddings"],
+        warehouse=str(tmp_path),
         n_partitions=16,
     )
+    files = list((tmp_path / "mentions").glob("part-*.parquet"))
+    assert 0 < len(files) <= spark.sparkContext.defaultParallelism
     key = ["subj", "pred", "obj", "conv_id", "turn_idx"]
     a = out["triples"].toPandas().sort_values(key).reset_index(drop=True)
     b = kg_small["triples"].toPandas().sort_values(key).reset_index(drop=True)

@@ -148,7 +148,7 @@ def test_full_readback_pays_no_nlp_setup(spark, small_inputs, tmp_path, monkeypa
     def refuse(*_a, **_k):
         raise AssertionError("NLP set-up ran on a full read-back")
 
-    monkeypatch.setattr(partitioning, "profile_hot_keys", refuse)
+    monkeypatch.setattr(partitioning, "profile_keys", refuse)
     monkeypatch.setattr(V, "GazMatcher", refuse)
     # an empty broadcast cache: any NLP set-up would build a matcher
     monkeypatch.setitem(nlp_stage._CACHE, "app", None)
